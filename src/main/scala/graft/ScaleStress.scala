@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.GraftSession
+import graft.core.{ArtifactCache, GraftSession}
 import graft.queries.Dedup
 
 /** Scale-stress harness: measures the dedup/graph/ANN family on synthetic
@@ -309,7 +309,7 @@ object ScaleStress {
           val idx = s"target/scale/ivf_index_x$k"
           // cold build: no warm quantizer/index memo may subsidize the
           // build number this table reports
-          graft.queries.Similarity.clearQuantMemo()
+          ArtifactCache.clear()
           spark.catalog.clearCache(); System.gc()
           val b0 = System.nanoTime()
           graft.queries.Similarity.buildIvfIndex(spark, dir, idx,
@@ -340,7 +340,7 @@ object ScaleStress {
           val idx = s"target/scale/ivfpq_index_x$k"
           graft.core.FsUtil.deleteRecursively(idx)
           // cold build: no warm quantizer/codebook memo may subsidize it
-          graft.queries.Similarity.clearQuantMemo()
+          ArtifactCache.clear()
           spark.catalog.clearCache(); System.gc()
           val b0 = System.nanoTime()
           graft.queries.Similarity.buildIvfPqIndex(spark, dir, idx,
@@ -364,7 +364,7 @@ object ScaleStress {
     // same artifact: time the bare n13 probe, then n15 (probe + rescore);
     // premium = the difference at each scale. Each form is min-of-2 so
     // BOTH time the warm serving path — the first n13 rep pays the
-    // probe-plan collect (pqProbeMemo cold) that every later rep of
+    // probe-plan collect (`ivfpq.probe` cache cold) that every later rep of
     // either form memo-hits; a single-shot A/B charges that one-time cost
     // entirely to whichever form runs first.
     sys.env.get("SPARK_GRAFT_N15").map(_.split(",").map(_.trim.toInt).toSeq)
@@ -374,7 +374,7 @@ object ScaleStress {
           generate(spark, baseDir, dir, k)
           val idx = s"target/scale/ivfpq_index_x$k"
           graft.core.FsUtil.deleteRecursively(idx)
-          graft.queries.Similarity.clearQuantMemo()
+          ArtifactCache.clear()
           spark.catalog.clearCache(); System.gc()
           graft.queries.Similarity.buildIvfPqIndex(spark, dir, idx,
             numCells = d11Cells(k))
@@ -427,7 +427,7 @@ object ScaleStress {
           // deriving the local batch and first-cell contents from dirty
           // state on repeat runs
           graft.core.FsUtil.deleteRecursively(idx)
-          graft.queries.Similarity.clearQuantMemo()
+          ArtifactCache.clear()
           spark.catalog.clearCache(); System.gc()
           val b0 = System.nanoTime()
           graft.queries.Similarity.buildIvfPqBaseIndex(spark, dir, idx,
@@ -497,7 +497,7 @@ object ScaleStress {
           val dir = s"target/scale/x$k"
           generate(spark, baseDir, dir, k)
           val idx = s"target/scale/ivfpq_upsert_x$k"
-          graft.queries.Similarity.clearQuantMemo()
+          ArtifactCache.clear()
           var buildSec = -1.0
           def rebuildBase(): Unit = {
             graft.core.FsUtil.deleteRecursively(idx)
@@ -575,7 +575,7 @@ object ScaleStress {
           val dir = s"target/scale/x$k"
           generate(spark, baseDir, dir, k)
           val idx = s"target/scale/ivfpq_router_x$k"
-          graft.queries.Similarity.clearQuantMemo()
+          ArtifactCache.clear()
           def rebuildBase(): Unit = {
             graft.core.FsUtil.deleteRecursively(idx)
             spark.catalog.clearCache(); System.gc()
@@ -973,7 +973,7 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_SKEW").map(_.toInt).foreach { k =>
       val dir = s"target/scale/x${k}skew"
       generate(spark, baseDir, dir, k, boilerplate = true)
-      Dedup.clearMemos(); graft.queries.Similarity.clearQuantMemo(); spark.catalog.clearCache(); System.gc()
+      ArtifactCache.clear(); spark.catalog.clearCache(); System.gc()
       val q0 = System.nanoTime()
       val rows = materialize(SparkEntry.queries("d5_ngram_jaccard")(spark, dir))
       val sec = (System.nanoTime() - q0) / 1e9
@@ -1002,7 +1002,7 @@ object ScaleStress {
           val ledgerRows = ledger.count()
           val batch = spark.read.parquet(s"$baseDir/documents.parquet")
             .withColumn("doc_id", col("doc_id") + (200L * IdOffset))
-          Dedup.clearMemos(); graft.queries.Similarity.clearQuantMemo(); spark.catalog.clearCache(); System.gc()
+          ArtifactCache.clear(); spark.catalog.clearCache(); System.gc()
           val q0 = System.nanoTime()
           val (v, next) = graft.operators.TextDedup.incrementalVerdicts(batch, ledger)
           val rows = materialize(v)
@@ -1098,7 +1098,7 @@ object ScaleStress {
         (1 to reps).foreach { _ =>
           // cold per rep: no memoized signatures, no cached frames, fresh
           // GC baseline — the curve must measure end-to-end per-query cost
-          Dedup.clearMemos(); graft.queries.Similarity.clearQuantMemo()
+          ArtifactCache.clear()
           spark.catalog.clearCache()
           System.gc()
           val q0 = System.nanoTime()

@@ -2,14 +2,15 @@ package graft.core
 
 import scala.util.Try
 
-/** A small bounded LRU memo for per-session derived artifacts — the r15
-  * verdict's memo-hygiene item: the six session memos (Dedup's
-  * signature/pair/cluster frames, Similarity's quantizer/index/probe
-  * plans) cached per (session, corpus dir) in plain `TrieMap`s and never
-  * evicted. Harmless in the one-dir driver harness; in a long-lived
-  * multi-tenant session the entries accumulate and, for the DataFrame
-  * memos, pin lineage and cached blocks for corpora nobody will ask
-  * about again.
+/** A small bounded LRU memo — the store behind [[ArtifactCache]], the
+  * process's one cache of derived artifacts (Dedup's signature/pair/
+  * cluster frames, Similarity's quantizers, codebooks, probe plans and
+  * index builds). Bounding it was the r15 verdict's memo-hygiene item: in
+  * a long-lived multi-tenant session unbounded entries accumulate and,
+  * for the DataFrame entries, pin lineage and cached blocks for corpora
+  * nobody will ask about again. Whether an entry is still VALID (its
+  * input files unchanged) is [[ArtifactCache]]'s concern, not this
+  * class's.
   *
   * Semantics, deliberately inherited from the TrieMaps they replace:
   *
@@ -18,11 +19,11 @@ import scala.util.Try
   *     memo user). Two first callers racing on one key may both compute;
   *     the first insert wins, the loser's value is released via
   *     [[onEvict]] and the winner returned — output stays correct, the
-  *     reuse guarantee is best-effort (Dedup.scala's documented race).
-  *   - Eviction is LRU once `capacity` (session, dir)-class keys are
-  *     held; evicted values go through [[onEvict]] (unpersist for the
-  *     DataFrame memos, no-op for plain-metadata memos). An evicted
-  *     entry is never wrong — the next caller recomputes.
+  *     reuse guarantee is best-effort.
+  *   - Eviction is LRU once `capacity` keys are held; evicted values go
+  *     through [[onEvict]] (unpersist for DataFrame values, no-op for
+  *     plain metadata). An evicted entry is never wrong — the next caller
+  *     recomputes.
   *   - [[isDead]] keys (a stopped session's) are purged on every
   *     mutating access, so a closed session's frames are released on the
   *     next memo touch by anyone, without a listener registration per
@@ -30,8 +31,8 @@ import scala.util.Try
   *     stopped session's cache may throw, and eviction is best-effort
   *     resource release, never worth failing the caller's query.
   *   - `remove` hands the value BACK to the caller (no [[onEvict]]):
-  *     the one remover (Similarity's rebuild eviction) owns the
-  *     replacement decision.
+  *     the one remover ([[ArtifactCache]], dropping a stale entry before
+  *     its recompute) owns the release decision.
   */
 final class BoundedMemo[K, V](capacity: Int,
     isDead: K => Boolean = (_: Any) => false,

@@ -11,13 +11,10 @@ object FsUtil {
   /** Whether every path exists, each resolved through the Hadoop
     * [[FileSystem]] of the path's OWN scheme — `file:`, `hdfs://`,
     * `s3a://` alike — with ONE Hadoop conf construction for the batch
-    * (the index memos' intactness probes run on every warm build request,
-    * and newHadoopConf copies the whole session conf per call). The
-    * java.nio spelling this replaces is scheme-blind: on a remote FS it
-    * reports every artifact missing, so a build-once/probe-many memo
-    * silently rebuilds its index on every probe — the exact hazard class
-    * the round-15 sweep killed in Layout.compactRoundtrip (SCALING.md).
-    * This is the probe entry point both index freshness checks call.
+    * (newHadoopConf copies the whole session conf per call). The java.nio
+    * spelling is scheme-blind: on a remote FS it reports every artifact
+    * missing — the exact hazard class the round-15 sweep killed in
+    * Layout.compactRoundtrip (SCALING.md).
     */
   def allExist(spark: org.apache.spark.sql.SparkSession,
       paths: Seq[String]): Boolean = {
@@ -29,12 +26,12 @@ object FsUtil {
   }
   /** Metadata signature of every file under the given paths (recursive):
     * each file's qualified path, length, and mtime, sorted — two cheap
-    * metadata listings, no Spark jobs. Used to key process-resident caches
-    * of small immutable artifacts (the quantizer-read memo): any rewrite
-    * changes the part-file names (task UUIDs) and mtimes, so a stale cache
-    * entry can never match a mutated artifact. A missing path contributes
-    * a distinct `absent:` token rather than throwing — the caller's actual
-    * read supplies the real error.
+    * metadata listings, no Spark jobs. [[ArtifactCache]] validates every
+    * entry with it: any rewrite changes the part-file names (task UUIDs)
+    * and mtimes, so a stale entry can never match mutated files. Resolved
+    * through each path's own FileSystem, like [[allExist]]. A missing path
+    * contributes a distinct `absent:` token rather than throwing — the
+    * caller's actual read supplies the real error.
     */
   def filesSig(spark: org.apache.spark.sql.SparkSession,
       paths: Seq[String]): String = {

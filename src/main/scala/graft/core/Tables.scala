@@ -25,6 +25,11 @@ object Tables {
     */
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  /** Where table `name` of the corpus at `dir` lives (a file or a
+    * directory of part files).
+    */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 }
 
 final case class Tables(spark: SparkSession, dir: String) {
@@ -40,7 +45,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   // build their own builder and still route every read through Tables.
   spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = spark.read.parquet(Tables.path(dir, name))
 
   def region: DataFrame = table("region")
   def nation: DataFrame = table("nation")

@@ -190,7 +190,8 @@ object TextDedup {
   }
 
   /** [[incrementalVerdicts]] for a caller that already holds the batch's
-    * MATERIALIZED banded signature frame (band, bh, doc_id). Contract: the
+    * MATERIALIZED banded signature frame (doc_id, band, bh) — the column
+    * order [[minhashBandsAgg]] produces (via [[bandsOf]]). Contract: the
     * frame must be exactly `minhashBandsAgg(batch)` for the ingested batch
     * and must be cheap to re-derive (materialized, or a filter over a
     * materialized frame) — every consumer below re-reads it, including two

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{BoundedMemo, Tables}
+import graft.core.{ArtifactCache, Tables}
 import graft.functions.{TextHash, VectorLsh, VectorOps}
 import graft.functions.TextHash.{hash60, hash60Sql, P}
 
@@ -238,55 +238,29 @@ object Dedup {
        |sims AS (SELECT doc_id, $simExpr AS simhash FROM bs)""".stripMargin
   }
 
-  /** [[simhashSigs]] memoized per (session, table dir): d3, d4, d9 and the
-    * t14 capstone all consume the same signatures, and a Verify/Bench run
-    * invokes them back to back — returning the SAME cached DataFrame
-    * instance lets every consumer (and every bench re-run) reuse one
-    * materialization instead of re-scanning and re-hashing the corpus per
-    * query. At scale this is one fewer full-corpus token explode per
-    * consumer; the cached frame itself is two longs per document.
-    *
-    * r16 memo hygiene (r15 verdict item 2): all three memos here are
-    * [[BoundedMemo]]s — LRU-capped at [[MemoCapacity]] corpora, purged of
-    * stopped sessions' keys on every touch, evicted frames unpersisted —
-    * so a long-lived multi-tenant session can no longer accumulate
-    * lineage-pinning entries without bound. Same best-effort race
-    * semantics as before (see [[clustersFor]]).
+  /** [[simhashSigs]] as a cached frame in [[ArtifactCache]] (kind
+    * `dedup.sigs`, validated against the documents files): d3, d4, d9 and
+    * the t14 capstone all consume the same signatures, and a Verify/Bench
+    * run invokes them back to back — returning the SAME cached DataFrame
+    * instance lets every consumer reuse one materialization instead of
+    * re-scanning and re-hashing the corpus per query. At scale this is one
+    * fewer full-corpus token explode per consumer; the cached frame itself
+    * is two longs per document. A rewrite of the documents files in place
+    * releases the frame and recomputes it on the next call.
     */
-  /** Cap on distinct (session, corpus dir) keys held per memo: a
-    * harness touches one or two corpora, a service a handful — beyond
-    * that, the LRU entry's consumers have moved on and a recompute on
-    * re-visit is the right trade against pinned lineage.
-    */
-  private val MemoCapacity = 8
+  private def corpusFiles(dir: String): Seq[String] =
+    Seq(Tables.path(dir, "documents"))
 
-  private def newFrameMemo: BoundedMemo[(SparkSession, String), DataFrame] =
-    new BoundedMemo(MemoCapacity,
-      isDead = kv => kv._1.sparkContext.isStopped,
-      onEvict = df => df.unpersist(false))
-  private val sigMemo = newFrameMemo
   private def sigsFor(spark: SparkSession, dir: String): DataFrame =
-    sigMemo.getOrElseUpdate((spark, dir),
+    ArtifactCache.getOrCompute(spark, "dedup.sigs", Seq(dir), corpusFiles(dir))(
       simhashSigs(Tables(spark, dir).documents).cache())
 
-  /** Verified near-dup pair set (pre-sort), memoized like [[sigsFor]]:
-    * d9's clustering (and t14 through it) reuses d4's pair generation
-    * instead of re-running the chunk self-join.
+  /** Verified near-dup pair set (pre-sort), cached like [[sigsFor]]
+    * (kind `dedup.pairs`): d9's clustering (and t14 through it) reuses
+    * d4's pair generation instead of re-running the chunk self-join.
     */
-  private val pairMemo = newFrameMemo
-
-  /** Drop the signature/pair memos (benchmark hook: ScaleStress times every
-    * query COLD so a scaling curve measures end-to-end cost, not whichever
-    * query happened to run first and warm the memo for the rest).
-    */
-  private[graft] def clearMemos(): Unit = {
-    sigMemo.clear()  // clear() releases via the memo's unpersist hook
-    pairMemo.clear()
-    clusterMemo.clear() // checkpoint-backed, nothing to unpersist
-  }
-
   private def pairsFor(spark: SparkSession, dir: String): DataFrame =
-    pairMemo.getOrElseUpdate((spark, dir), {
+    ArtifactCache.getOrCompute(spark, "dedup.pairs", Seq(dir), corpusFiles(dir)) {
       val sims = sigsFor(spark, dir)
       val chunkStructs = (0 until 4).map { c =>
         struct(lit(c).as("ci"),
@@ -307,7 +281,7 @@ object Dedup {
         .filter(col("hamming") <= 3)
         .select("d1", "d2", "hamming")
         .cache()
-    })
+    }
 
   /** SimHash signatures per document. */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
@@ -808,31 +782,24 @@ object Dedup {
     */
   def dupClusters(spark: SparkSession, dir: String): DataFrame = {
     VectorOps.register(spark) // graft_hash60
-    val labels = connectedComponents(pairsFor(spark, dir).select("d1", "d2"))
-    // populate the composition memo as a side effect: a session that runs
-    // d9 hands its fixpoint to downstream consumers (t14) for free
-    clusterMemo.putIfAbsent((spark, dir), labels)
+    // hand the fixpoint to downstream consumers (t14) as a side effect
+    val labels = ArtifactCache.putIfAbsent(spark, "dedup.clusters", Seq(dir),
+      corpusFiles(dir))(connectedComponents(pairsFor(spark, dir).select("d1", "d2")))
     labels.orderBy("doc_id")
   }
 
-  /** Memoized cluster labels per session+dir for COMPOSING queries (t14's
-    * curation join), in the spirit of [[sigsFor]]/[[pairsFor]]: a derived
-    * artifact downstream consumers share instead of re-running the
-    * iterative loop. [[dupClusters]] itself always computes — its reported
-    * cost must stay the true cost of clustering, not a memo read. The
-    * loop's output is already materialized (localCheckpoint), so the memo
-    * stores the final frame as-is.
-    *
-    * Concurrency note: TrieMap.getOrElseUpdate is not atomic — two first
-    * callers racing on the same (session, dir) could each run the loop once.
-    * Output stays correct (the loop is deterministic); the reuse guarantee
-    * is best-effort, which is sufficient for the sequential harnesses here.
+  /** Cached cluster labels for COMPOSING queries (t14's curation join,
+    * t24's split; kind `dedup.clusters`), in the spirit of
+    * [[sigsFor]]/[[pairsFor]]: a derived artifact downstream consumers
+    * share instead of re-running the iterative loop. [[dupClusters]]
+    * itself always computes — its reported cost must stay the true cost of
+    * clustering, not a cache read. The loop's output is already
+    * materialized (localCheckpoint), so the entry is the final frame as-is.
+    * Two first callers racing on one corpus may each run the loop once;
+    * output stays correct (the loop is deterministic).
     */
-  private val clusterMemo =
-    new BoundedMemo[(SparkSession, String), DataFrame](MemoCapacity,
-      isDead = kv => kv._1.sparkContext.isStopped)
   private[queries] def clustersFor(spark: SparkSession, dir: String): DataFrame =
-    clusterMemo.getOrElseUpdate((spark, dir),
+    ArtifactCache.getOrCompute(spark, "dedup.clusters", Seq(dir), corpusFiles(dir))(
       connectedComponents(pairsFor(spark, dir).select("d1", "d2")))
 
   /** The d9 transitive-closure chain as a reusable CTE block ending in

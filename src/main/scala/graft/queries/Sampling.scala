@@ -529,7 +529,7 @@ object Sampling {
     * to train — every member hashes the same value by construction.
     *
     * Scale shape: the expensive part (pair generation + components) is
-    * d9's already-measured shape, shared via the session memo when a prior
+    * d9's already-measured shape, shared via the artifact cache when a prior
     * query in the session computed it; the split itself is one join of the
     * corpus against the cluster frame (only docs that ARE in clusters —
     * small; broadcast at scale) plus a per-row hash. Deterministic at any
